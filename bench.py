@@ -299,7 +299,9 @@ def _top_queries_fit(
 ) -> dict[str, float]:
     """Largest-first subset of `times` that keeps json.dumps(out) (with
     the subset under out['queries']) within max_bytes, ≤ TOP_QUERIES_MAX
-    entries. Mutates out['queries'] to the chosen subset and returns it."""
+    entries. An entry that does not fit is skipped, not the end: a
+    shorter-named later entry may still fit. Mutates out['queries'] to
+    the chosen subset and returns it."""
     top: dict[str, float] = {}
     for name in sorted(times, key=lambda n: (-times[n], n)):
         if len(top) >= TOP_QUERIES_MAX:
@@ -308,7 +310,7 @@ def _top_queries_fit(
         trial[name] = round(times[name], 3)
         out["queries"] = trial
         if len(json.dumps(out).encode()) > max_bytes:
-            break
+            continue
         top = trial
     out["queries"] = top
     return top

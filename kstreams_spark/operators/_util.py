@@ -9,6 +9,8 @@ integer math are bit-deterministic and need no special handling.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -46,6 +48,40 @@ def davg(col: Column | str) -> Column:
 DSUM_SQL = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
 DAVG_SQL = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE) / COUNT({x})"
 
+# What DuckDB runs for each `CAST(<expr> AS DECIMAL(18,6))` of an oracle
+# (registry.query applies oracle_dec6 to every registered oracle). Spark
+# casts a double through its shortest decimal string
+# (java.lang.Double.toString) rounded HALF_UP; DuckDB's direct cast rounds
+# the binary value, so the engines disagree on doubles within an ulp of a
+# half-millionth — 0.6638124999999999 is 0.663812 in Spark, 0.663813 in
+# DuckDB's direct cast. Rounding DuckDB's shortest string the same way
+# agrees with Spark on 1.68M doubles (half-millionths ±1 ulp, both signs,
+# 1e-300 to 1e12). The string goes through DECIMAL(38,26) and ROUND
+# because DuckDB's string → DECIMAL(18,6) cast misreads exponent forms
+# ('5e-07' → 0.000001) and its decimal downscale truncates.
+DEC6_SQL = (
+    "CAST(ROUND(CAST(CAST({x} AS VARCHAR) AS DECIMAL(38,26)), 6)"
+    " AS DECIMAL(18,6))"
+)
+_DEC6_END = re.compile(r"\s+AS\s+DECIMAL\(18,\s*6\)\)", re.IGNORECASE)
+
+
+def oracle_dec6(sql: str) -> str:
+    """Rewrite every `CAST(<expr> AS DECIMAL(18,6))` in oracle SQL into
+    the DEC6_SQL form, so the oracle rounds each double like Spark."""
+    out, pos = [], 0
+    for m in _DEC6_END.finditer(sql):
+        depth, i = 0, m.start() - 1
+        while depth or sql[i] != "(":  # back to this CAST's open paren
+            depth += {")": 1, "(": -1}.get(sql[i], 0)
+            i -= 1
+        if sql[i - 4 : i].upper() != "CAST" or i < pos:
+            continue
+        out.append(sql[pos : i - 4])
+        out.append(DEC6_SQL.format(x=sql[i + 1 : m.start()]))
+        pos = m.end()
+    return "".join(out) + sql[pos:]
+
 
 def fence(df: DataFrame) -> DataFrame:
     """Optimizer fence: a checkpoint that stops predicate pushdown /
@@ -71,7 +107,15 @@ def fence(df: DataFrame) -> DataFrame:
     localCheckpoint: materializes during the query's own first action,
     blocks freed by the ContextCleaner. On a real lake, scan-side gate
     evaluation over split files is often what you want anyway — SCALE.md
-    keeps the per-site disposition table."""
+    keeps the per-site disposition table.
+
+    Footprint: the localCheckpoint holds the fenced rows in executor
+    block storage until the query's DataFrames are collected. Most
+    fenced frames are small aggregates, but dedup.ngram_jaccard_pairs
+    fences one shingle SET per doc — doc-grain in rows, corpus-grain in
+    bytes (about the whole shingled corpus text). Without a checkpoint
+    dir that is corpus-scale executor memory for the query's lifetime;
+    point the checkpoint dir at storage before running it at scale."""
     sc = df.sparkSession.sparkContext
     try:
         ckpt_dir = sc.getCheckpointDir()

@@ -141,15 +141,19 @@ def ngram_jaccard_pairs(
     stream — the propose and verify sides previously each exploded and
     shingled the corpus (three evaluations counting both join sides),
     paying the shingle transform, md5, and a doc-keyed exchange per
-    evaluation. The combined doc-grain aggregate (k mins + one set per
-    doc — the bounded "small aggregate feeding many branches" class,
-    NOT the r15 dead-end's exploded-row checkpoint) is fenced so the
-    bands branch and both pair-side lookups read one materialization.
-    Aggregate values are identical to the split form (same MIN over the
-    same md5 stream — MIN is duplicate-insensitive; same collect_set),
-    so results are unchanged."""
-    if candidates is None:
-        sh = _shingles(docs, n, distinct=False).select(
+    evaluation. The combined doc-grain aggregate (k mins + one shingle
+    set per doc) is fenced so the bands branch and both pair-side
+    lookups read one materialization. It is doc-grain in ROWS but
+    corpus-grain in BYTES — the sets hold about the whole shingled
+    corpus (see fence()'s footprint note). Aggregate values are
+    identical to the split form (same MIN over the same md5 stream —
+    MIN is duplicate-insensitive; same collect_set), so results are
+    unchanged. The combined form needs the verify width `n` to equal
+    the proposer's width, which minhash_signatures and the DuckDB
+    oracle (shingles_sql(3)) pin at 3; any other `n` proposes from
+    minhash_signatures and verifies on its own n-grams."""
+    if candidates is None and n == 3:
+        sh = _shingles(docs, 3, distinct=False).select(
             "doc_id", "shingle", F.md5("shingle").alias("h")
         )
         from kstreams_spark.operators._util import fence
@@ -170,6 +174,10 @@ def ngram_jaccard_pairs(
         )
         doc_sets = combined.select("doc_id", "shs")
     else:
+        if candidates is None:
+            candidates = minhash_band_pairs(
+                minhash_signatures(docs, n_hashes), n_hashes, n_bands
+            )
         doc_sets = (
             _shingles(docs, n, distinct=False)
             .groupBy("doc_id")
@@ -594,6 +602,9 @@ def _simhash_sig_batches(it):
         },
     }
     for pdf in it:
+        # a NULL text has no tokens and no signature, as the
+        # explode(split(text)) form it replaced emitted no row for it
+        pdf = pdf[pdf["text"].notna()]
         if len(pdf) == 0:
             yield pd.DataFrame(empty)
             continue

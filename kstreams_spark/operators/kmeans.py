@@ -183,12 +183,15 @@ def kmeans_fit(
         # arithmetic (float64 v·c·FX, _np_round_half_up, strict->
         # update ties to the LOWEST cen_id) and the sums replay _fx()
         # per element; tests/test_kmeans.py pins the whole fit bitwise
-        # against the NumPy twin and pins the collect cap.
+        # against the NumPy twin and pins the collect cap. The sums are
+        # DECIMAL(38,0), not int64: FX-scaled components overflow a long
+        # at ~9.2e6 unit-scale members per cell, where the driver's
+        # Python ints never did (pinned with ~1e6 components).
         sums = (
             emb.select("embedding")
             .mapInPandas(
                 _lloyd_partials(cur),
-                "cen_id long, dim long, sum_fx long, n long",
+                "cen_id long, dim long, sum_fx decimal(38,0), n long",
             )
             .groupBy("cen_id", "dim")
             .agg(
@@ -201,7 +204,7 @@ def kmeans_fit(
         counts: dict[int, int] = {}
         for r in sums:
             a = acc.setdefault(r.cen_id, [0] * dim)
-            a[r.dim] += r.sum_fx
+            a[r.dim] += int(r.sum_fx)
             if r.dim == 0:
                 counts[r.cen_id] = counts.get(r.cen_id, 0) + r.n
         nxt = []
@@ -221,7 +224,11 @@ def _lloyd_partials(cen_mat: list[list[float]]):
     argmax, bit-identical fixed-point arithmetic) and emit per-(cen_id,
     dim) partial sums of _fx(v) plus member counts (n rides dim 0 rows'
     grain but is emitted on every row for schema simplicity; the driver
-    counts it once per task via dim == 0)."""
+    counts it once per task via dim == 0). Sums are exact Python ints
+    (Arrow ships them as the schema's DECIMAL(38,0)), so a batch's
+    partial never wraps: each int64 component splits into its signed
+    high and unsigned low 32-bit halves, each half sums in int64 (safe
+    below 2^31 rows per batch), and (hi << 32) + lo rejoins them."""
     import numpy as np
     import pandas as pd
 
@@ -232,7 +239,7 @@ def _lloyd_partials(cen_mat: list[list[float]]):
     empty = {
         "cen_id": pd.Series([], dtype="int64"),
         "dim": pd.Series([], dtype="int64"),
-        "sum_fx": pd.Series([], dtype="int64"),
+        "sum_fx": pd.Series([], dtype="object"),
         "n": pd.Series([], dtype="int64"),
     }
 
@@ -265,16 +272,18 @@ def _lloyd_partials(cen_mat: list[list[float]]):
                 n = int(mask.sum())
                 if not n:
                     continue
-                s = v_fx[mask].sum(axis=0, dtype=np.int64)
+                m = v_fx[mask]
+                hi = (m >> 32).sum(axis=0)
+                lo = (m & 0xFFFFFFFF).sum(axis=0)
                 out_cid.extend([cid] * dim)
                 out_dim.extend(range(dim))
-                out_sum.extend(int(x) for x in s)
+                out_sum.extend((int(h) << 32) + int(l) for h, l in zip(hi, lo))
                 out_n.extend([n] * dim)
             yield pd.DataFrame(
                 {
                     "cen_id": pd.Series(out_cid, dtype="int64"),
                     "dim": pd.Series(out_dim, dtype="int64"),
-                    "sum_fx": pd.Series(out_sum, dtype="int64"),
+                    "sum_fx": pd.Series(out_sum, dtype="object"),
                     "n": pd.Series(out_n, dtype="int64"),
                 }
             )

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import math
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as FWindow
@@ -48,6 +49,7 @@ from kstreams_spark.operators.similarity import (
     _plane_components,
     _sig_expr,
 )
+from kstreams_spark.operators.text import IDF_SCALE
 
 
 def write_lsh_index(
@@ -184,15 +186,27 @@ def write_ivf_index(
 def assign_cell(vec: list[float], centroids: list[list[float]]) -> int:
     """Driver-side twin of kmeans_assign for ONE vector: exact int64
     fixed-point dots, ties to the lowest cen_id."""
-    best_id, best_dot = 0, None
-    for cid, cen in enumerate(centroids):
-        dot = sum(
-            _round_half_away(float(v) * float(c) * FX)
-            for v, c in zip(vec, cen)
+    return nearest_cells(vec, centroids, 1)[0]
+
+
+def nearest_cells(
+    vec: list[float], centroids: list[list[float]], n_probe: int
+) -> list[int]:
+    """The `n_probe` cells whose centroids have the largest exact int64
+    fixed-point dot with `vec`, ties to the lowest cen_id."""
+    dots = [
+        (
+            cid,
+            sum(
+                _round_half_away(float(v) * float(c) * FX)
+                for v, c in zip(vec, cen)
+            ),
         )
-        if best_dot is None or dot > best_dot:
-            best_id, best_dot = cid, dot
-    return best_id
+        for cid, cen in enumerate(centroids)
+    ]
+    return [
+        cid for cid, _ in sorted(dots, key=lambda t: (-t[1], t[0]))[:n_probe]
+    ]
 
 
 def probe_ivf_index(
@@ -206,19 +220,7 @@ def probe_ivf_index(
     """Top-k cosine neighbors reading only the query's `n_probe` nearest
     cells (n_probe > 1 is the standard recall lever for queries near cell
     boundaries). Returns (vec_id, cosine) ordered."""
-    dots = [
-        (
-            cid,
-            sum(
-                _round_half_away(float(v) * float(c) * FX)
-                for v, c in zip(query_vec, cen)
-            ),
-        )
-        for cid, cen in enumerate(centroids)
-    ]
-    cells = [
-        cid for cid, _ in sorted(dots, key=lambda t: (-t[1], t[0]))[:n_probe]
-    ]
+    cells = nearest_cells(query_vec, centroids, n_probe)
     q_arr = F.array(*[F.lit(float(v)) for v in query_vec])
     nq2 = sum(_round_half_away(float(v) * float(v) * FX) for v in query_vec)
     postings = spark.read.parquet(path).filter(F.col("cen_id").isin(cells))
@@ -316,19 +318,7 @@ def probe_ivf_sq8_index(
     everything, the single-index behavior."""
     params = load_sq8_params(spark, path)
     qq = quantize_query(query_vec, params)
-    dots = [
-        (
-            cid,
-            sum(
-                _round_half_away(float(v) * float(c) * FX)
-                for v, c in zip(query_vec, cen)
-            ),
-        )
-        for cid, cen in enumerate(centroids)
-    ]
-    cells = [
-        cid for cid, _ in sorted(dots, key=lambda t: (-t[1], t[0]))[:n_probe]
-    ]
+    cells = nearest_cells(query_vec, centroids, n_probe)
     # pre-fold the query side: per-dim struct(a·q1 +, b·q1) so the scan's
     # lambda is one zip_with over (query-side struct, stored code)
     qz = F.array(
@@ -723,19 +713,7 @@ def probe_ivf_pq_index(
             _round_half_away(float(v) * float(c) * FX)
             for v, c in zip(qs, r.cvec)
         )
-    dots = [
-        (
-            cid,
-            sum(
-                _round_half_away(float(v) * float(c) * FX)
-                for v, c in zip(query_vec, cen)
-            ),
-        )
-        for cid, cen in enumerate(centroids)
-    ]
-    cells = [
-        cid for cid, _ in sorted(dots, key=lambda t: (-t[1], t[0]))[:n_probe]
-    ]
+    cells = nearest_cells(query_vec, centroids, n_probe)
     lut_lit = F.array(
         *[
             F.array(*[F.lit(int(x)) for x in row])
@@ -832,14 +810,13 @@ def probe_postings_index(
     path: str,
     terms: tuple[str, ...],
     k: int = 20,
-    idf_scale: int = 1000,
     max_epoch: int | None = None,
 ) -> DataFrame:
     """Multi-term keyword query against the persisted index: read ONLY
     the terms' bucket partitions (PartitionFilters — pinned in
     tests/test_serving_postings.py), derive each term's exact df from
-    its complete in-bucket posting list, score Σ tf·(n_docs·scale DIV
-    df), return the top-k by (score desc, doc_id) — the same scoring
+    its complete in-bucket posting list, score Σ tf·(n_docs·IDF_SCALE
+    DIV df), return the top-k by (score desc, doc_id) — the same scoring
     contract as the batch `search_topk_keywords`, equality pinned.
 
     `max_epoch` caps visibility at a committed epoch — posting rows AND
@@ -879,7 +856,7 @@ def probe_postings_index(
     )
     idf = postings.groupBy("tok").agg(
         F.expr(
-            f"CAST({n_docs * idf_scale} DIV count(DISTINCT doc_id) AS BIGINT)"
+            f"CAST({n_docs * IDF_SCALE} DIV count(DISTINCT doc_id) AS BIGINT)"
         ).alias("w")
     )
     scored = (
@@ -891,6 +868,292 @@ def probe_postings_index(
         )
     )
     return scored.orderBy(F.col("score").desc(), "doc_id").limit(k)
+
+
+# --- driver-resident snapshot probes -----------------------------------------
+# A probe of a small index is Spark job scheduling, not work: ~11 jobs per
+# probe over a 500-doc index. Below DRIVER_INDEX_MAX_ROWS the rows of an
+# index committed at one epoch load ONCE with pyarrow (the caller keeps
+# the snapshot until its epoch moves — streaming/hybrid.py), and each
+# probe replays the Spark probe's integer arithmetic in NumPy: the same
+# dedupe key, the same probe-local live-epoch resolution, the same idf /
+# code score, the same (score desc, id) top-k. Answers and schemas equal
+# probe_postings_index / probe_ivf_sq8_index at a cap (pinned in
+# tests/test_hybrid_snapshot.py). The result is a local relation built
+# from an Arrow table, so collecting it starts no Spark job.
+
+# Sized like DRIVER_CC_MAX_EDGES: the ~60 MB of driver memory that 500k
+# collected Rows take at ~100-150 B each. A loader passes the bytes one
+# of its rows holds once loaded; the footers' row count times that is
+# checked before anything loads, and above the budget the Spark probe
+# serves. Files load one partition at a time, so the peak is the held
+# snapshot plus one partition's Arrow rows.
+DRIVER_INDEX_MAX_BYTES = 60_000_000
+# A held posting: tok (4 B offset + the token's bytes), doc_id, tf and
+# epoch (8 B each), ~40 B in all.
+POSTING_ROW_BYTES = 40
+
+
+def _read_capped(
+    path: str, max_epoch: int, row_bytes: int, part: str | None = None
+):
+    """The rows with epoch ≤ `max_epoch` of the parquet dataset under
+    `path` as (partition value, rows) pairs, each partition read only
+    when its pair is taken; None when there is no data file or the
+    footers' row count times `row_bytes` exceeds DRIVER_INDEX_MAX_BYTES.
+    `part` names the hive partition column the rows are filed under
+    (`<part>=<value>` dirs); without one, all rows come as the one pair
+    (None, rows). Only committed data files are listed: in-flight write
+    attempts (`_temporary`), checksums and displace-swap leftovers
+    (`*.new-del` / `*.old-del`) never match. Delta and tombstone files
+    differ in nullability, so every field reads as nullable."""
+    import glob
+    import re
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    groups: dict = {}
+    if part is None:
+        groups[None] = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    else:
+        for f in sorted(glob.glob(os.path.join(path, f"{part}=*", "*.parquet"))):
+            d = os.path.basename(os.path.dirname(f))
+            if re.fullmatch(rf"{part}=[\w-]+", d):
+                groups.setdefault(d.split("=", 1)[1], []).append(f)
+    files = [f for fs in groups.values() for f in fs]
+    if not files:
+        return None
+    every = ds.dataset(files, format="parquet")
+    if every.count_rows() * row_bytes > DRIVER_INDEX_MAX_BYTES:
+        return None
+    schema = pa.schema([f.with_nullable(True) for f in every.schema])
+    return (
+        (
+            v,
+            ds.dataset(fs, format="parquet", schema=schema).to_table(
+                filter=ds.field("epoch") <= max_epoch
+            ),
+        )
+        for v, fs in groups.items()
+    )
+
+
+def _key_max(keys, vals):
+    """(sorted distinct keys, max of `vals` per key)."""
+    import numpy as np
+
+    o = np.lexsort((vals, keys))
+    keys, vals = keys[o], vals[o]
+    last = np.ones(len(keys), bool)
+    last[:-1] = keys[1:] != keys[:-1]
+    return keys[last], vals[last]
+
+
+def _live_rows(ids, epochs):
+    """Mask of the rows at their id's max epoch — the probe-local
+    live-epoch resolution of the Spark probes (a replaced or erased
+    id's newer tombstone hides its older rows)."""
+    import numpy as np
+
+    uid, live = _key_max(ids, epochs)
+    return epochs == live[np.searchsorted(uid, ids)]
+
+
+def _top_k(spark: SparkSession, ids, scores, k: int, fields) -> DataFrame:
+    """The (score desc, id) top-k of per-id scores as a local relation;
+    `fields` are the Arrow fields of the Spark probe's output schema
+    (id, score, then any extra columns passed in `scores`' tail)."""
+    import numpy as np
+    import pyarrow as pa
+
+    cols = [ids, *scores]
+    o = np.lexsort((ids, -scores[0]))[:k]
+    return spark.createDataFrame(
+        pa.table([c[o] for c in cols], schema=pa.schema(fields))
+    )
+
+
+class PostingsSnapshot(NamedTuple):
+    """The rows of a postings index committed at one epoch, held on the
+    driver: the live doc count behind idf, each bucket's
+    (tok, doc_id, tf, epoch) rows, and the doc_id Arrow type."""
+
+    n_docs: int
+    buckets: dict
+    doc_type: object
+
+
+def load_postings_snapshot(path: str, max_epoch: int) -> PostingsSnapshot | None:
+    """Load a postings index as of `max_epoch` (None above the driver
+    cap or without data files). n_docs is `_live_postings_docs(path, max_epoch).count()`: a doc
+    is live iff its latest `_docs` epoch beats its latest `_dels` one."""
+    import numpy as np
+
+    buckets = _read_capped(path, max_epoch, POSTING_ROW_BYTES, part="part")
+    if buckets is None:
+        return None
+    buckets = dict(buckets)
+    # _docs/_dels are (doc_id, epoch) rows, reduced to n_docs on load
+    docs = _read_capped(path + "_docs", max_epoch, 16)
+    if docs is None:
+        return None
+    [(_, docs)] = docs
+    ids, live = _key_max(docs["doc_id"].to_numpy(), docs["epoch"].to_numpy())
+    alive = np.ones(len(ids), bool)
+    dels = (
+        _read_capped(path + "_dels", max_epoch, 16)
+        if os.path.isdir(path + "_dels")
+        else None
+    )
+    if dels is not None:
+        [(_, dels)] = dels
+    if dels is not None and dels.num_rows:
+        del_ids, del_e = _key_max(
+            dels["doc_id"].to_numpy(), dels["epoch"].to_numpy()
+        )
+        at = np.minimum(np.searchsorted(del_ids, ids), len(del_ids) - 1)
+        alive = (del_ids[at] != ids) | (live > del_e[at])
+    return PostingsSnapshot(
+        int(alive.sum()),
+        buckets,
+        next(iter(buckets.values())).schema.field("doc_id").type,
+    )
+
+
+def probe_postings_snapshot(
+    spark: SparkSession,
+    snap: PostingsSnapshot,
+    terms: tuple[str, ...],
+    k: int = 20,
+) -> DataFrame:
+    """Driver twin of `probe_postings_index(..., max_epoch=<the
+    snapshot's epoch>)`: the terms' bucket rows plus the buckets'
+    tombstones, deduped on (tok, doc_id, epoch), resolved to each doc's
+    live epoch, scored Σ tf·(n_docs·IDF_SCALE DIV df), top-k by
+    (score desc, doc_id). Returns (doc_id, score, n_terms_hit)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    terms = list(dict.fromkeys(terms))
+    parts = sorted({f"p{tok_bucket_py(t)}" for t in terms})
+    tabs = [snap.buckets[p] for p in parts if p in snap.buckets]
+    fields = [
+        pa.field("doc_id", snap.doc_type),
+        pa.field("score", pa.int64()),
+        pa.field("n_terms_hit", pa.int64(), nullable=False),
+    ]
+    if not tabs:
+        empty = np.zeros(0, np.int64)
+        return _top_k(spark, empty, [empty, empty], k, fields)
+    rows = pa.concat_tables(tabs)
+    term = pc.index_in(rows["tok"], value_set=pa.array(terms, pa.string()))
+    pulled = pc.or_(pc.is_valid(term), pc.is_null(rows["tok"]))
+    rows, term = rows.filter(pulled), term.filter(pulled)
+    key = np.stack(
+        [
+            term.fill_null(-1).to_numpy().astype(np.int64),
+            rows["doc_id"].to_numpy(),
+            rows["epoch"].to_numpy(),
+        ],
+        axis=1,
+    )
+    key, first = np.unique(key, axis=0, return_index=True)
+    tok, doc, ep = key.T
+    tf = rows["tf"].to_numpy()[first]
+    scoring = _live_rows(doc, ep) & (tok >= 0)
+    tok, doc, tf = tok[scoring], doc[scoring], tf[scoring]
+    df = np.bincount(tok, minlength=len(terms))
+    w = np.zeros(len(terms), np.int64)
+    w[df > 0] = (snap.n_docs * IDF_SCALE) // df[df > 0]
+    ids, at = np.unique(doc, return_inverse=True)
+    score = np.zeros(len(ids), np.int64)
+    np.add.at(score, at, tf * w[tok])
+    hits = np.bincount(at, minlength=len(ids)).astype(np.int64)
+    return _top_k(spark, ids, [score, hits], k, fields)
+
+
+class Sq8Snapshot(NamedTuple):
+    """The rows of an IVF-SQ8 index committed at one epoch, held on the
+    driver: the frozen quantizer params and centroids, each cell's
+    (vec_id, epoch, has-code, codes matrix) arrays, and the vec_id Arrow
+    type."""
+
+    params: list
+    centroids: list
+    cells: dict
+    vec_type: object
+
+
+def load_sq8_snapshot(path: str, max_epoch: int) -> Sq8Snapshot | None:
+    """Load an IVF-SQ8 index as of `max_epoch` (None above the driver
+    cap or without data files). Codes are 0..255, so each cell's matrix is uint8: a held row
+    is dim code bytes plus vec_id, epoch and the has-code flag."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    params = pq.read_table(path + "/_params").column("params")[0].as_py()
+    dim = len(params)
+    rows = _read_capped(path + "/cells", max_epoch, dim + 24, part="cen_id")
+    if rows is None:
+        return None
+    cents = pq.read_table(path + "/_centroids").sort_by("cen_id")
+    centroids = [[float(x) for x in c] for c in cents["cvec"].to_pylist()]
+    cells = {}
+    for cid, t in rows:
+        vec_type = t.schema.field("vec_id").type
+        has = t["q"].is_valid().to_numpy(zero_copy_only=False)
+        codes = np.zeros((t.num_rows, dim), np.uint8)
+        codes[has] = (
+            t["q"].combine_chunks().flatten().to_numpy().reshape(-1, dim)
+        )
+        cells[int(cid)] = (
+            t["vec_id"].to_numpy(),
+            t["epoch"].to_numpy(),
+            has,
+            codes,
+        )
+    return Sq8Snapshot(params, centroids, cells, vec_type)
+
+
+def probe_sq8_snapshot(
+    spark: SparkSession,
+    snap: Sq8Snapshot,
+    query_vec: list[float],
+    k: int = 10,
+    n_probe: int = 1,
+) -> DataFrame:
+    """Driver twin of `probe_ivf_sq8_index(..., max_epoch=<the
+    snapshot's epoch>)`: the query's n_probe nearest cells, rows deduped
+    on (vec_id, epoch, q), resolved to each vector's live epoch, scored
+    by the integer Σ a·q + (a + b·q)·c, top-k by (score_q desc, vec_id).
+    Returns (vec_id, score_q)."""
+    import numpy as np
+    import pyarrow as pa
+
+    qq = np.array(quantize_query(query_vec, snap.params), np.int64)
+    a = np.array([int(p["a"]) for p in snap.params], np.int64)
+    b = np.array([int(p["b"]) for p in snap.params], np.int64)
+    got = [
+        snap.cells[c]
+        for c in nearest_cells(query_vec, snap.centroids, n_probe)
+        if c in snap.cells
+    ]
+    dim = len(snap.params)
+    vid, ep, has, codes = (
+        [np.concatenate(x) for x in zip(*got)]
+        if got
+        else [np.zeros(0, np.int64)] * 2
+        + [np.zeros(0, bool), np.zeros((0, dim), np.uint8)]
+    )
+    key = np.column_stack([vid, ep, has, codes])
+    _, first = np.unique(key, axis=0, return_index=True)
+    vid, ep, has, codes = vid[first], ep[first], has[first], codes[first]
+    scoring = _live_rows(vid, ep) & has
+    score = codes[scoring] @ (a + b * qq) + int((a * qq).sum())
+    fields = [pa.field("vec_id", snap.vec_type), pa.field("score_q", pa.int64())]
+    return _top_k(spark, vid[scoring], [score], k, fields)
 
 
 # --- incremental postings maintenance (VERDICT r8 task 3) -------------------

@@ -47,21 +47,27 @@ the torn-delete crash test in tests/test_hybrid_erasure.py.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kstreams_spark.operators.retrieval import RRF_K, RRF_SCALE
 from kstreams_spark.serving import (
+    _read_centroids,
     compact_ivf_pq_index,
     compact_ivf_sq8_index,
     compact_postings_index,
     delete_ivf_pq_vecs,
     delete_ivf_sq8_vecs,
     delete_postings_docs,
+    load_postings_snapshot,
+    load_sq8_snapshot,
     probe_ivf_pq_index,
     probe_ivf_sq8_index,
     probe_postings_index,
+    probe_postings_snapshot,
+    probe_sq8_snapshot,
     upsert_ivf_pq_delta,
     upsert_ivf_sq8_delta,
     upsert_postings_delta,
@@ -100,6 +106,10 @@ class HybridIngestMaintainer(_EpochMarkedMaintainer):
         self.postings_dir = os.path.join(root, "postings")
         self.sq8_dir = os.path.join(root, "sq8")
         self.pq_dir = os.path.join(root, "pq")
+        # driver-resident probe snapshots: index name → (epoch, snapshot
+        # or None above the driver cap); see _snapshot
+        self._snaps: dict[str, tuple] = {}
+        self._snap_lock = threading.Lock()
 
     # -- write side ---------------------------------------------------
 
@@ -613,14 +623,38 @@ class HybridIngestMaintainer(_EpochMarkedMaintainer):
         return (max(ids) + 1 if ids else 0) + off
 
     # -- read side (all legs capped at ONE snapshot epoch) ------------
+    #
+    # The lexical and SQ8 legs answer from a driver-resident snapshot of
+    # the index at the capped epoch (serving.load_*_snapshot): loaded once
+    # per epoch, probed in NumPy, no Spark job per probe. Rows at or below
+    # a committed epoch never change meaning — later epochs only append
+    # above it, and compaction folds without changing any answer — so the
+    # epoch alone keys the snapshot. Above serving.DRIVER_INDEX_MAX_BYTES
+    # the Spark probe serves.
 
-    def _centroids(self, spark: SparkSession, path: str) -> list[list[float]]:
-        return [
-            [float(x) for x in r.cvec]
-            for r in spark.read.parquet(path + "/_centroids")
-            .orderBy("cen_id")
-            .collect()
-        ]
+    def _snapshot(self, name: str, epoch: int):
+        """The `name` ('postings' | 'sq8') index's snapshot at `epoch`,
+        loading it when the held one is at another epoch. One lock
+        serializes loads, so concurrent probes across an epoch advance
+        load each epoch once and never see a half-built snapshot. Only
+        the visible epoch's snapshot is kept: a cap below it (a probe
+        that read the epoch just before an advance, or an explicit
+        older cap) would evict the one the next probes need, and a cap
+        above it may still be gaining rows, so either serves one probe."""
+        held = self._snaps.get(name)
+        if held is not None and held[0] == epoch:
+            return held[1]
+        with self._snap_lock:
+            held = self._snaps.get(name)
+            if held is None or held[0] != epoch:
+                if name == "postings":
+                    snap = load_postings_snapshot(self.postings_dir, epoch)
+                else:
+                    snap = load_sq8_snapshot(self.sq8_dir, epoch)
+                if epoch != self.visible_epoch():
+                    return snap
+                held = self._snaps[name] = (epoch, snap)
+        return held[1]
 
     def probe_lexical(
         self,
@@ -630,6 +664,9 @@ class HybridIngestMaintainer(_EpochMarkedMaintainer):
         max_epoch: int | None = None,
     ) -> DataFrame:
         e = self.visible_epoch() if max_epoch is None else max_epoch
+        snap = self._snapshot("postings", e)
+        if snap is not None:
+            return probe_postings_snapshot(spark, snap, terms, k=k)
         return probe_postings_index(
             spark, self.postings_dir, terms, k=k, max_epoch=e
         )
@@ -649,16 +686,19 @@ class HybridIngestMaintainer(_EpochMarkedMaintainer):
                 spark,
                 self.pq_dir,
                 query_vec,
-                self._centroids(spark, self.pq_dir),
+                _read_centroids(spark, self.pq_dir),
                 k=k,
                 n_probe=n_probe,
                 max_epoch=e,
             )
+        snap = self._snapshot("sq8", e)
+        if snap is not None:
+            return probe_sq8_snapshot(spark, snap, query_vec, k=k, n_probe=n_probe)
         return probe_ivf_sq8_index(
             spark,
             self.sq8_dir,
             query_vec,
-            self._centroids(spark, self.sq8_dir),
+            _read_centroids(spark, self.sq8_dir),
             k=k,
             n_probe=n_probe,
             max_epoch=e,
@@ -909,6 +949,8 @@ class HybridIngestMaintainer(_EpochMarkedMaintainer):
         with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
             futs = {k: pool.submit(j) for k, j in jobs.items()}
             out = {k: f.result() for k, f in futs.items()}
+        with self._snap_lock:  # reload the folded files on the next probe
+            self._snaps.clear()
         # committed erase-intent logs are stale once their offset bump
         # landed (the applied>visible guard above proved none is live)
         import glob as _glob

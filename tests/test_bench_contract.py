@@ -161,3 +161,14 @@ def test_headline_names_are_registered():
     registry.load_all()
     missing = [n for n in bench.HEADLINE if n not in registry.QUERIES]
     assert not missing, missing
+
+
+def test_top_queries_skips_an_oversize_entry():
+    """One long-named slowest query must not empty the summary map: it is
+    skipped and the shorter-named queries behind it still fit."""
+    times = {"q" * 900: 9.0, "q2": 2.0, "q3": 1.0}
+    out = {"metric": 1}
+    top = bench._top_queries_fit(times, out, 200)
+    assert top == {"q2": 2.0, "q3": 1.0}
+    assert out["queries"] == top
+    assert len(json.dumps(out).encode()) <= 200

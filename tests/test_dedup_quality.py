@@ -926,3 +926,40 @@ def test_pagerank_driver_and_distributed_agree(spark, monkeypatch):
         for r in dedup.pagerank_fixed(pairs).collect()
     }
     assert via_driver == via_loop and via_driver
+
+
+def test_simhash_batches_drop_null_text():
+    """A NULL text yields no signature row — the null-drop of the
+    explode(split(text)) form the mapInPandas body replaced — and does
+    not disturb its batch neighbours' signatures."""
+    import pandas as pd
+
+    from kstreams_spark.operators.dedup import _simhash_sig_batches
+
+    both = pd.DataFrame({"doc_id": [1, 2, 3], "text": ["a b a", None, "c"]})
+    alone = pd.DataFrame({"doc_id": [1, 3], "text": ["a b a", "c"]})
+    got = pd.concat(list(_simhash_sig_batches(iter([both]))))
+    want = pd.concat(list(_simhash_sig_batches(iter([alone]))))
+    assert list(got["doc_id"]) == [1, 3]
+    assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
+    only_null = pd.DataFrame({"doc_id": [9], "text": [None]})
+    assert len(pd.concat(list(_simhash_sig_batches(iter([only_null]))))) == 0
+
+
+def test_jaccard_default_candidates_propose_at_width_3(spark, sf_dir):
+    """The default candidates are the minhash band pairs over 3-token
+    shingles (the oracle's shingles_sql(3)) whatever verify width `n`
+    the caller asks for."""
+    from kstreams_spark.io import load_table
+    from kstreams_spark.operators.dedup import (
+        minhash_band_pairs,
+        minhash_signatures,
+        ngram_jaccard_pairs,
+    )
+
+    d = load_table(spark, sf_dir, "documents")
+    cand = minhash_band_pairs(minhash_signatures(d))
+    for n in (2, 3):
+        got = ngram_jaccard_pairs(d, n=n, threshold=0.3)
+        want = ngram_jaccard_pairs(d, candidates=cand, n=n, threshold=0.3)
+        assert sorted(got.collect()) == sorted(want.collect())

@@ -248,3 +248,22 @@ def test_lloyd_collect_is_capped_at_k_times_dim(spark):
         fits[width] = kmeans_fit(emb, k=k, iters=iters)
     assert fits[1] == fits[7]
     assert fits[1] == _numpy_twin(rows, k=k, iters=iters)
+
+
+def test_lloyd_sums_past_int64_stay_exact(spark):
+    """FX-scaled components of ~1e6 are ~1e18 each, so 16 members of one
+    cell sum past int64 (~9.2e18). The Lloyd fold must still equal the
+    exact Python-int mean, not wrap or raise ARITHMETIC_OVERFLOW."""
+    rows = [
+        (i, [float(np.float32(1e6 + 1000 * i)), float(np.float32(2e6 - 500 * i))])
+        for i in range(16)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    sums = [
+        sum(int(_round_half_away(np.float64(v[d]) * float(FX))) for _, v in rows)
+        for d in range(2)
+    ]
+    assert max(sums) > np.iinfo(np.int64).max
+    mean = [(s / FX) / len(rows) for s in sums]
+    norm = math.sqrt(math.fsum(x * x for x in mean))
+    assert kmeans_fit(emb, k=1, iters=1) == [[x / norm for x in mean]]

@@ -78,8 +78,14 @@ def main() -> int:
 
     n_workers = min(8, len(qs)) or 1
     sessions: _q.Queue = _q.Queue()
-    for _ in range(n_workers):
-        sessions.put((spark.newSession(), con.cursor()))
+    pooled = [spark.newSession() for _ in range(n_workers)]
+    # the real driver runs entry() first on its one session: the confs it
+    # leaves (load_table's UTC pin) are the baseline every query must keep
+    for sess in pooled:
+        e.entry(sess)
+    confs0 = [_watched_confs(sess) for sess in pooled]
+    for sess in pooled:
+        sessions.put((sess, con.cursor()))
 
     def run_one(item):
         name, fn = item
@@ -106,8 +112,27 @@ def main() -> int:
             if status.startswith("FAIL"):
                 failed.append(name)
             print(f"  {name:32s} {dt:6.2f}s {status}")
+    # the real driver runs every query on ONE session, where a leaked
+    # conf poisons the queries after it; the pool isolates sessions, so
+    # check that no query left its worker's confs changed
+    for i, (sess, before) in enumerate(zip(pooled, confs0)):
+        after = _watched_confs(sess)
+        if after != before:
+            failed.append(f"conf-leak(worker {i})")
+            print(f"  FAIL  conf leak on worker {i}: {before} -> {after}")
     print(f"\n{'ALL OK' if not failed else 'FAILED: ' + ', '.join(failed)}")
     return 1 if failed else 0
+
+
+WATCHED_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.session.timeZone",
+    "spark.sql.ansi.enabled",
+)
+
+
+def _watched_confs(sess) -> dict:
+    return {k: sess.conf.get(k) for k in WATCHED_CONFS}
 
 
 def drift_check(sf_dir: str) -> int:
